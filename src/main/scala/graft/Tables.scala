@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver testdata (TESTDATA.md / FIXTURES.md §B).
   *
@@ -15,8 +16,25 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  // inferred schema per session and (path, source fingerprint). Per
+  // session because session confs such as nanosAsLong change what
+  // inference returns; weak so a stopped session's entries go with it.
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, StructType]]())
+
+  /** Read one table. Only the first read of a table in a session (per
+    * source fingerprint) runs Spark's schema-inference job; later reads
+    * pass the memoized schema. Every call returns a fresh DataFrame, so
+    * two reads in one query get distinct attribute ids. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = schemas
+      .computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+      .computeIfAbsent(s"$path|${sourceFingerprint(dir, Seq(name))}",
+        _ => spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

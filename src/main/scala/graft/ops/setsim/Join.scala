@@ -799,24 +799,29 @@ trait SetSimJoins { this: Dedup.type =>
           s"exceeds graft.setsim.maxExchangeBytes=$budget — tighten " +
           "the threshold, salt the top gram, or raise the budget")
     }
+    nearDupsOn(spark, idx, 700000L)
+      .repartition(1)
+      .sortWithinPartitions(col("doc_a"), col("doc_b"), col("jaccard_ppm"))
+  }
+
+  /** Every (doc_a, doc_b, jaccard_ppm) pair of a persisted index's
+    * corpus with exact Jaccard ≥ `tPpm`, unsorted — the index-riding
+    * form of [[setSimJoin]]. */
+  private[graft] def nearDupsOn(spark: SparkSession, idx: SetSimIndex,
+      tPpm: Long): DataFrame = {
     val sz = idx.sizerOf(spark)
     val cand = selfCandidatesFromPrefix(
-      prefixCutFilter(idx.ranked, 700000L), 700000L)
+      prefixCutFilter(idx.ranked, tPpm), tPpm)
     // over the broadcast threshold the classic verify pays the
     // gram-array exchange between its two joins (the 30× 224 s
     // cliff); the index path then switches to the PACKED verify
     // (delta-varint gram sets, ~4× smaller exchange, no array on any
     // exchange) unless explicitly disabled
-    val verified =
-      if (sz.gramBytes > sz.limit &&
-          packedVerifyConf(spark).getOrElse(true))
-        verifyPairsPacked(cand, idx.gramSets, 700000L)
-      else
-        verifyPairs(cand, idx.gramSets, "doc_a", idx.gramSets, "doc_b",
-          sz, sz, 700000L)
-    verified
-      .repartition(1)
-      .sortWithinPartitions(col("doc_a"), col("doc_b"), col("jaccard_ppm"))
+    if (sz.gramBytes > sz.limit && packedVerifyConf(spark).getOrElse(true))
+      verifyPairsPacked(cand, idx.gramSets, tPpm)
+    else
+      verifyPairs(cand, idx.gramSets, "doc_a", idx.gramSets, "doc_b",
+        sz, sz, tPpm)
   }
 
   /** Threshold sweep (q258): the payoff of the THRESHOLD-INDEPENDENT

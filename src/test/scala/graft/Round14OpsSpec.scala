@@ -121,6 +121,9 @@ class Round14OpsSpec extends SparkSpec {
       (s, d) => Tables.documents(s, d).filter(col("doc_id") < 120),
       indexRoot = root)
     try {
+      // the bucket count the index is built with: the session's
+      // shuffle-partition count at resolve time
+      val buckets = spark.sessionState.conf.numShufflePartitions
       val idx = resolve()
       val before = idx.ranked.collect()
         .map(r => r.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
@@ -154,14 +157,16 @@ class Round14OpsSpec extends SparkSpec {
       markers.foreach(f => assert(
         f.lastModified() === mtimes(f.getPath),
         s"index was REBUILT (marker rewritten): ${f.getPath}"))
-      // ...and the re-attached table must carry the bucket metadata
-      // (a plain createTable would silently void the zero-exchange
-      // join plans)
-      mine.filter(_.startsWith("ssi_rk_")).foreach { t =>
+      // ...and both re-attached tables must carry the bucket metadata
+      // they were built with (a plain createTable would silently void
+      // the zero-exchange join plans)
+      assert(mine.map(_.take(7)).sorted.toSeq === Seq("ssi_gs_", "ssi_rk_"))
+      mine.foreach { t =>
+        val key = if (t.startsWith("ssi_rk_")) "g64" else "doc_id"
         val desc = spark.sql(s"DESCRIBE TABLE EXTENDED $t").collect()
           .map(r => s"${r.getString(0)}|${r.getString(1)}").mkString("\n")
-        assert(desc.contains("Num Buckets|32") &&
-          desc.contains("Bucket Columns|[`g64`]"),
+        assert(desc.contains(s"Num Buckets|$buckets") &&
+          desc.contains(s"Bucket Columns|[`$key`]"),
           s"bucket metadata lost on re-attach of $t:\n$desc")
       }
     } finally Dedup.unpersistCaches()
